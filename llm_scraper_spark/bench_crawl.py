@@ -142,14 +142,6 @@ def run(cores: int, seeds: int, rounds: int, budget_ms: int) -> dict:
                     "fetched": m["fetched"],
                     "elapsed_sec": m["elapsed_sec"],
                     "phase_sec": m["phase_sec"],
-                    # present when SPARK_GRAFT_PHASE_CPU=1: per-phase
-                    # busy-core fraction of the pinned cpuset — the
-                    # scaling audit's serial-time locator
-                    **(
-                        {"phase_busy_cores_frac": m["phase_busy_cores_frac"]}
-                        if "phase_busy_cores_frac" in m
-                        else {}
-                    ),
                 }
                 for m in manifests
             ],

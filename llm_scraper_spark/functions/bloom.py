@@ -1,19 +1,24 @@
-"""Partitioned Bloom prefilter for the URL-seen set.
+"""Bloom prefilter for the URL-seen set.
 
 North-rule component: "Bloom/cuckoo URL-seen set".  The Bloom filter is
 a *prefilter only* — candidates it marks "maybe seen" are confirmed by
 an exact anti-join against the seen-set table, so seen-set semantics
 stay exact (false positives cost a join probe, never a dropped URL).
 Candidates it marks "definitely new" skip the shuffle join entirely;
-at 10^10 URLs with a mostly-fresh frontier this removes the dominant
-shuffle.
+with a mostly-fresh frontier this removes the dominant shuffle.
 
-Construction is distributed: each seen-set partition folds its hashes
-into a local bitmap (mapInPandas, numpy-vectorized); the driver ORs the
-fixed-size bitmaps (size depends only on capacity, not row count) and
-broadcasts the result.  At true 10^10 scale the bitmap itself is
-sharded by hash range (``shards`` param) so each executor only probes
-its shard — the same code path, more shards.
+Two filter types share one probe expression (``bloom_probe_col``):
+
+* ``BloomFilter`` — one numpy bitmap on the driver, folded from the
+  seen set's url_hash column (plans/crawler) and broadcast into the
+  probe.  This is the filter the crawler runs.
+* ``BloomDir`` — a hash-range-sharded filter that lives in parquet and
+  is folded, absorbed, compacted and probed on the executors, for
+  bitmap sets too big for one process (~12 GB at 10^10 URLs / 1% fpp).
+  No crawler wires it in yet; scripts/probe_bloom_dir.py measures it.
+
+``ShardedBloom`` is the pure-numpy sharded reference that BloomDir is
+tested against (tests/test_bloom_dir.py).
 
 Reference analog: in-memory ``VISITED`` list / ``set()``
 (extract_product_urls.py:12,39-41,57) — O(n) driver memory, the exact
@@ -52,7 +57,7 @@ class BloomFilter:
 
         Bit 63 is masked off FIRST, exactly as the JVM probe does
         (``hash & (2^63-1)`` in ``bloom_probe_col``): url_hash is
-        contractually 63-bit, but build_bloom accepts arbitrary frames,
+        contractually 63-bit, but the filters accept arbitrary hashes,
         and an unmasked top bit would leak into ``h1 >> 31`` and
         diverge the two engines' probe positions."""
         h1 = hashes.astype(np.uint64) & np.uint64((1 << 63) - 1)
@@ -105,16 +110,27 @@ class BloomFilter:
 
 @dataclass
 class ShardedBloom:
-    """Hash-range-sharded Bloom filter: shard ``url_hash % n_shards``
-    owns its own independent bitmap.  At 10^10 URLs / 1% fpp the
-    monolithic bitmap is ~1.4 GiB — too big to rebuild, ship, and
-    broadcast as one blob; sharded, each row of ``bitmap_df`` carries
-    one shard and the probe equi-joins on the shard key, so executors
-    hash-route to exactly the rows they need and shard count scales
-    the design without changing the probe code path."""
+    """Hash-range-sharded Bloom filter in numpy: shard ``url_hash %
+    n_shards`` owns its own independent bitmap, sized exactly as a
+    ``BloomDir`` of the same (capacity, shards, fpp).  The pure-Python
+    reference that tests compare ``BloomDir``'s executor-side build and
+    probe against."""
 
     n_shards: int
     shards: list[BloomFilter]  # index = url_hash % n_shards
+
+    @classmethod
+    def from_hashes(
+        cls, hashes: np.ndarray, capacity: int, n_shards: int, fpp: float = 0.01
+    ) -> "ShardedBloom":
+        hs = np.asarray(hashes).astype(np.uint64)
+        shards = [
+            BloomFilter.empty(-(-capacity // n_shards), fpp) for _ in range(n_shards)
+        ]
+        sid = _shard_ids(hs, n_shards)
+        for s in np.unique(sid):
+            shards[int(s)].add(hs[sid == s])
+        return cls(n_shards, shards)
 
     @property
     def m_bits(self) -> int:
@@ -125,10 +141,10 @@ class ShardedBloom:
         return self.shards[0].k
 
     def maybe_contains(self, hashes: np.ndarray) -> np.ndarray:
-        """Pure-Python probe (test oracle): route each hash to its
-        shard, probe there — via `_shard_ids`, the same signed
-        floor-mod the JVM ``pmod`` computes, so a hash with the top
-        bit set routes identically in both engines."""
+        """Route each hash to its shard, probe there — via
+        `_shard_ids`, the same signed floor-mod the JVM ``pmod``
+        computes, so a hash with the top bit set routes identically in
+        both engines."""
         hs = np.asarray(hashes, dtype=np.uint64)
         out = np.zeros(len(hs), dtype=bool)
         sid = _shard_ids(hs, self.n_shards)
@@ -148,76 +164,13 @@ def _shard_ids(hashes: np.ndarray, n_shards: int) -> np.ndarray:
     return np.asarray(hashes, dtype=np.uint64).view(np.int64) % np.int64(n_shards)
 
 
-def build_bloom(
-    seen: DataFrame,
-    capacity: int,
-    fpp: float = 0.01,
-    shards: int = 1,
-    fold_partitions: int | None = None,
-) -> "BloomFilter | ShardedBloom | None":
-    """Distributed build: per-partition bitmaps OR'd on the driver.
-
-    Driver memory = one bitmap set (~1.2 MB per 10^6 capacity at 1%
-    fpp), independent of seen-set cardinality.  ``shards`` > 1 splits
-    the filter by hash range (see ``ShardedBloom``); each map task
-    folds its rows into per-shard local bitmaps so the build stays one
-    pass either way.
-
-    ``fold_partitions`` coalesces the scan before the fold: every fold
-    task ships one FULL-SIZE partial bitmap to the driver, so the
-    collect volume is tasks × bitmap bytes — over a many-file seen set
-    (hundreds of per-round snapshot files) an unbounded task count was
-    measured moving ~300 MB of partials for a 20M-capacity filter.
-    Coalesce is narrow (no shuffle); the url_hash scan it serializes
-    is 8 bytes/row.
-    """
-    shards = max(1, shards)
-    proto = BloomFilter.empty(-(-capacity // shards), fpp)
-    m_bits, k = proto.m_bits, proto.k
-
-    def fold(batches):
-        bfs = [BloomFilter(m_bits, k, np.zeros(m_bits // 64, dtype=np.uint64))
-               for _ in range(shards)]
-        touched = set()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            hs = pdf["url_hash"].to_numpy(dtype=np.uint64)
-            sid = _shard_ids(hs, shards)
-            for s in np.unique(sid):
-                bfs[int(s)].add(hs[sid == s])
-                touched.add(int(s))
-        if touched:
-            yield pd.DataFrame(
-                {
-                    "shard": sorted(touched),
-                    "bitmap": [bfs[s].to_bytes() for s in sorted(touched)],
-                }
-            )
-
-    hashes = seen.select("url_hash")
-    if fold_partitions:
-        hashes = hashes.coalesce(fold_partitions)
-    parts = hashes.mapInPandas(fold, "shard int, bitmap binary").collect()
-    if not parts:
-        return None
-    accs = [np.zeros(m_bits // 64, dtype=np.uint64) for _ in range(shards)]
-    for row in parts:
-        accs[row["shard"]] |= np.frombuffer(row["bitmap"], dtype=np.uint64)
-    if shards == 1:
-        return BloomFilter(m_bits, k, accs[0])
-    return ShardedBloom(shards, [BloomFilter(m_bits, k, a) for a in accs])
-
-
 # ------------------------------------------------ parquet-backed filter
 @dataclass
 class BloomDir:
     """A sharded Bloom filter that LIVES IN PARQUET, never on the
     driver — the 10^10-URL regime (~12 GB of bitmap at 10 bits/URL,
-    1% fpp), where collecting per-task partials driver-side (the
-    ``build_bloom`` path) would move tasks × bitmap bytes through one
-    process and the driver-side absorb fold (plans/crawler) would hold
-    the whole bitmap set in driver memory.
+    1% fpp), where the driver-side fold (plans/crawler) would hold the
+    whole bitmap set in driver memory.
 
     Layout: ``path/`` is a parquet table ``(_bloom_shard int,
     _bloom_arr array<bigint>)`` — one row per shard after a build or a
@@ -235,9 +188,15 @@ class BloomDir:
 
     @classmethod
     def load(cls, path: str) -> "BloomDir":
+        """Open the dir at ``path``.  If a compaction crashed between
+        its two renames (``path`` moved to ``path.old``, the compacted
+        dir not yet in place), the pre-compaction dir is restored."""
         import json
         import os
 
+        old = path.rstrip("/") + ".old"
+        if not os.path.isdir(path) and os.path.isdir(old):
+            os.rename(old, path)
         with open(os.path.join(path, "_bloom_meta.json")) as f:
             meta = json.load(f)
         return cls(path, meta["n_shards"], meta["m_bits"], meta["k"])
@@ -292,37 +251,18 @@ def _shard_fold_kernel(m_bits: int, k: int, shards: int):
     return fold
 
 
-def build_bloom_dir(
-    seen: DataFrame,
-    capacity: int,
-    path: str,
-    *,
-    fpp: float = 0.01,
-    shards: int = 256,
-    append_to: "BloomDir | None" = None,
-    fold_partitions: int | None = None,
-) -> BloomDir:
-    """Executor-side sharded build: hashes are repartitioned BY SHARD
-    (so each shard's bitmap is folded whole by exactly one task) and
-    each task WRITES its (shard, bitmap) rows straight to parquet —
-    the driver ships paths, never bytes.  ``append_to`` absorbs a
-    delta frame into an existing dir as extra per-shard rows (O(delta)
-    compute + O(touched shards) write; see ``compact_bloom_dir``)."""
-    import json
-    import os
-
-    if append_to is not None:
-        m_bits, k, shards = append_to.m_bits, append_to.k, append_to.n_shards
-        path = append_to.path
-    else:
-        proto = BloomFilter.empty(-(-capacity // shards), fpp)
-        m_bits, k = proto.m_bits, proto.k
-    width = fold_partitions or min(shards, 64)
+def _write_shard_fold(hashes: DataFrame, bloom: BloomDir, mode: str) -> None:
+    """Fold ``hashes.url_hash`` into per-shard bitmap chunk rows on the
+    executors and write them under ``bloom.path``.  Hashes are
+    repartitioned BY SHARD, so each shard's bitmap is folded whole by
+    exactly one task, and each task WRITES its rows straight to parquet
+    — the driver ships paths, never bytes."""
+    shards = bloom.n_shards
     folded = (
-        seen.select("url_hash")
-        .repartition(width, F.pmod(F.col("url_hash"), F.lit(shards)))
+        hashes.select("url_hash")
+        .repartition(min(shards, 64), F.pmod(F.col("url_hash"), F.lit(shards)))
         .mapInPandas(
-            _shard_fold_kernel(m_bits, k, shards),
+            _shard_fold_kernel(bloom.m_bits, bloom.k, shards),
             "_bloom_shard int, _bloom_chunk int, _bloom_arr array<bigint>",
         )
     )
@@ -331,16 +271,34 @@ def build_bloom_dir(
     # ever touches another shard's bitmap (partitionBy here splits
     # files within each write task; the fold already routed rows, so
     # there is no extra shuffle)
-    (
-        folded.write.mode("append" if append_to is not None else "overwrite")
-        .partitionBy("_bloom_shard")
-        .parquet(path)
-    )
-    if append_to is not None:
-        return append_to
+    folded.write.mode(mode).partitionBy("_bloom_shard").parquet(bloom.path)
+
+
+def build_bloom_dir(
+    seen: DataFrame,
+    capacity: int,
+    path: str,
+    *,
+    fpp: float = 0.01,
+    shards: int = 256,
+) -> BloomDir:
+    """Executor-side sharded build of a new dir at ``path``."""
+    import json
+    import os
+
+    proto = BloomFilter.empty(-(-capacity // shards), fpp)
+    bloom = BloomDir(path, shards, proto.m_bits, proto.k)
+    _write_shard_fold(seen, bloom, "overwrite")
     with open(os.path.join(path, "_bloom_meta.json"), "w") as f:
-        json.dump({"n_shards": shards, "m_bits": m_bits, "k": k}, f)
-    return BloomDir(path, shards, m_bits, k)
+        json.dump({"n_shards": shards, "m_bits": bloom.m_bits, "k": bloom.k}, f)
+    return bloom
+
+
+def absorb_bloom_dir(delta: DataFrame, bloom: BloomDir) -> None:
+    """Absorb a delta frame into an existing dir as extra per-shard
+    rows — O(delta) compute + O(touched shards) write; the probe ORs a
+    shard's rows, and ``compact_bloom_dir`` folds them back to one."""
+    _write_shard_fold(delta, bloom, "append")
 
 
 def _shard_assemble_kernel(m_bits: int):
@@ -458,8 +416,9 @@ def _shard_compact_kernel():
 def compact_bloom_dir(spark: SparkSession, bloom: BloomDir) -> None:
     """Fold every (shard, chunk)'s base + delta rows back to one row —
     the periodic compaction that keeps probe-time OR work bounded
-    (same discipline as the seen-set and frontier logs).  Atomic via
-    write-to-tmp + rename."""
+    (same discipline as the seen-set and frontier logs).  Written to a
+    tmp dir, then swapped in by two renames; a crash between them is
+    repaired by ``BloomDir.load``."""
     import os
     import shutil
 
@@ -511,32 +470,13 @@ def bitmap_df(spark: SparkSession, bloom: BloomFilter) -> DataFrame:
     into the generated Java k times and Janino compile time explodes.
     As a join-side attribute the generated code is a bound reference —
     constant-size — and the array lives once in the broadcast, never
-    copied per row.  At true 10^10 scale the bitmap is sharded by hash
-    range (multiple rows keyed by shard, equi-joined on
-    ``hash % n_shards``) — same code path, more rows."""
+    copied per row."""
     words = np.asarray(bloom.words, dtype=np.uint64).view(np.int64)
     import pyarrow as pa
 
     arr = pa.array([words], type=pa.list_(pa.int64()))
     table = pa.Table.from_arrays([arr], names=["_bloom_arr"])
     return _ship_table(spark, table, "_bloom_arr array<bigint>", owner=bloom)
-
-
-def sharded_bitmap_df(spark: SparkSession, bloom: ShardedBloom) -> DataFrame:
-    """All shard bitmaps as ``(_bloom_shard bigint, _bloom_arr
-    array<bigint>)`` — one row per shard, same parquet ship path as
-    ``bitmap_df``; the probe equi-joins on the shard key."""
-    import pyarrow as pa
-
-    shard_ids = pa.array(range(bloom.n_shards), type=pa.int64())
-    arrs = pa.array(
-        [np.asarray(s.words, dtype=np.uint64).view(np.int64) for s in bloom.shards],
-        type=pa.list_(pa.int64()),
-    )
-    table = pa.Table.from_arrays([shard_ids, arrs], names=["_bloom_shard", "_bloom_arr"])
-    return _ship_table(
-        spark, table, "_bloom_shard bigint, _bloom_arr array<bigint>", owner=bloom
-    )
 
 
 #: process-lifetime staging dir for bitmap ships — created lazily,
@@ -546,9 +486,9 @@ def sharded_bitmap_df(spark: SparkSession, bloom: ShardedBloom) -> DataFrame:
 #: commits — the crawler re-ships the same mutated object every
 #: round), and a ``weakref.finalize`` removes the owner's remaining
 #: files when the object is collected.  Scoping retention to the
-#: owner means two Crawler instances — or a sharded and a plain bloom
-#: interleaving ships in one process — can never delete each other's
-#: still-referenced files (the old process-global keep-2 could).
+#: owner means two Crawler instances interleaving ships in one process
+#: can never delete each other's still-referenced files (the old
+#: process-global keep-2 could).
 #: Contract: a bitmap DataFrame is re-materializable only while its
 #: bloom object is alive and within 2 ships of it.
 #: ``SPARK_GRAFT_BLOOM_STAGE_DIR`` overrides the location for real
@@ -677,16 +617,16 @@ def bloom_probe_col(arr_sql: str, m_bits: int, k: int, hash_sql: str) -> "F.Colu
 def with_bloom_flag(
     spark: SparkSession,
     df: DataFrame,
-    bloom: "BloomFilter | ShardedBloom | None",
+    bloom: "BloomFilter | BloomDir | None",
     col: str = "url_hash",
 ) -> DataFrame:
     """Add ``_maybe_seen`` boolean via the JVM bitmap probe.
 
     The bitmap rides in as a broadcast join (see ``bitmap_df`` for why
     not a subquery/literal); the helper columns are dropped immediately
-    so nothing downstream caches or shuffles the array.  A
-    ``ShardedBloom`` broadcast-equi-joins each row to its hash-range
-    shard instead — same probe expression, per-shard bitmap."""
+    so nothing downstream caches or shuffles the array.  A ``BloomDir``
+    broadcast-equi-joins each row to its hash-range shard while its
+    bitmaps are small, and is probed map-side past that."""
     if bloom is None:
         return df.withColumn("_maybe_seen", F.lit(False))
     if isinstance(bloom, BloomDir):
@@ -718,20 +658,6 @@ def with_bloom_flag(
         # probe is equality-tested against the JVM expression in
         # tests/test_bloom_jvm.py).
         return _bloom_dir_probe_map(df, bloom, col)
-    if isinstance(bloom, ShardedBloom):
-        shards_df = F.broadcast(sharded_bitmap_df(spark, bloom))
-        probed = df.join(
-            shards_df,
-            F.pmod(F.col(col), F.lit(bloom.n_shards)) == F.col("_bloom_shard"),
-            "left",
-        )
-        return (
-            probed.withColumn(
-                "_maybe_seen",
-                bloom_probe_col("_bloom_arr", bloom.m_bits, bloom.k, col),
-            )
-            .drop("_bloom_arr", "_bloom_shard")
-        )
     probed = df.join(F.broadcast(bitmap_df(spark, bloom)))
     return probed.withColumn(
         "_maybe_seen",

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.bloom import BloomFilter, build_bloom, with_bloom_flag
+from ..functions.bloom import BloomFilter, with_bloom_flag
 from ..functions.urls import canonicalize_col, host_col, url_hash_col
 from ..sources.synthweb import fetch_batch, transient_ok
 
@@ -90,24 +90,7 @@ class RoundResult:
     fetched: DataFrame        # superset: url/spans/outlinks/slot/host/…
     blocked: DataFrame        # robots-blocked rows (url_hash, url, first_round)
     deferred: DataFrame       # politeness-deferred rows (FRONTIER schema)
-    fetch_log: DataFrame      # projection of fetched (FETCH_LOG schema)
-    documents: DataFrame      # projection of fetched (doc_id, spans, round)
-    seen_delta: DataFrame     # fetched ∪ blocked projections (SEEN schema)
-    # FRONTIER schema (deferred ∪ new links) — built on first access:
-    # constructing the delta plan costs ~0.4 s of py4j round trips, and
-    # the Crawler never reads this attribute (it derives the next
-    # frontier from the WRITTEN snapshot instead; see Crawler.run)
-    _next_frontier_factory: object = None
-    metrics: dict = field(default_factory=dict)
     _cached: list = field(default_factory=list)
-
-    @property
-    def next_frontier(self) -> DataFrame:
-        if self._next_frontier_factory is not None and not isinstance(
-            self._next_frontier_factory, DataFrame
-        ):
-            self._next_frontier_factory = self._next_frontier_factory()
-        return self._next_frontier_factory
 
     def unpersist(self) -> None:
         for df in self._cached:
@@ -163,13 +146,9 @@ def run_round(
     fetch_partitions: int | None = None,
     salt_buckets: int = 16,
     bloom: BloomFilter | None = None,
-    use_bloom: bool = True,
-    seen_count_estimate: int | None = None,
     seen_rows: int | None = None,
     fail_mod: int = 0,
     fail_attempts: int = 0,
-    max_attempts: int = DEFAULT_MAX_ATTEMPTS,
-    inlink_weight: float = 0.0,
 ) -> RoundResult:
     """Execute crawl round ``round_no``; all outputs are lazy DataFrames.
 
@@ -177,13 +156,15 @@ def run_round(
     on (host, salt) where salt = url_hash % salt_buckets, so one hot
     host spreads over ``salt_buckets`` partitions instead of one.
 
-    Materialization contract: the returned DataFrames share NO
-    persisted fetch result — ``fetched`` and every projection of it
-    (fetch_log/documents/seen_delta/next_frontier) re-executes the
-    Python fetch kernel when independently materialized.  This is
-    deliberate: ``Crawler.run`` writes ``fetched`` to its parquet
-    snapshot exactly once and derives every other output from the
-    WRITTEN snapshot, which is both crash-consistent and cheaper than
+    ``bloom``: the URL-seen prefilter; None plans the exact anti-join
+    alone.
+
+    Materialization contract: ``fetched`` is not persisted — every
+    consumer of it re-executes the Python fetch kernel when
+    independently materialized.  This is deliberate: ``Crawler.run``
+    writes ``fetched`` to its parquet snapshot exactly once and derives
+    every other output (next frontier, seen delta) from the WRITTEN
+    snapshot, which is both crash-consistent and cheaper than
     .persist() (AQE broadcast builds were measured re-executing a
     persisted fetch on cache miss).  Library callers that materialize
     more than one output directly must do the same: write ``fetched``
@@ -198,8 +179,6 @@ def run_round(
         frontier = frontier.withColumn("attempt", F.lit(0))
 
     # --- J3: frontier anti-join seen, Bloom-prefiltered ----------------
-    if use_bloom and bloom is None and seen_count_estimate:
-        bloom = build_bloom(seen, capacity=max(seen_count_estimate * 2, 4096))
     # The seen set is unbounded (10^10 URLs at target scale): its
     # anti-joins must be partitioned shuffle joins, never broadcast.
     # Without the hint, AQE's size estimate under-costs the seen scan
@@ -208,11 +187,8 @@ def run_round(
     # rows.  Strategy is two-regime (see _seen_join_hint): shuffled
     # hash while the per-partition build provably fits, sort-merge
     # (fully spillable) beyond.
-    seen_keys = seen.select("url_hash", "url").hint(
-        _seen_join_hint(seen_rows if seen_rows is not None
-                        else seen_count_estimate)
-    )
-    if use_bloom and bloom is not None:
+    seen_keys = seen.select("url_hash", "url").hint(_seen_join_hint(seen_rows))
+    if bloom is not None:
         flagged = with_bloom_flag(spark, frontier, bloom)
         fresh = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
         maybe = (
@@ -309,28 +285,10 @@ def run_round(
         .mapInPandas(_fetch_map_factory(fail_mod, fail_attempts), _FETCH_SCHEMA)
     )
 
-    projections = fetched_projections(fetched, round_no, max_attempts=max_attempts)
-    seen_delta = projections["seen_delta"].unionByName(blocked_seen)
-
-    def _next_frontier() -> DataFrame:
-        rt = retry_rows(fetched, round_no, max_attempts)
-        return deferred.unionByName(rt).unionByName(
-            frontier_delta(
-                fetched, seen, seen_delta, deferred, round_no=round_no,
-                retries=rt, inlink_weight=inlink_weight,
-                seen_rows=seen_rows,
-            )
-        )
-
     return RoundResult(
         fetched=fetched.withColumn("round", F.lit(round_no)),
         blocked=blocked_seen,
         deferred=deferred,
-        fetch_log=projections["fetch_log"],
-        documents=projections["documents"],
-        seen_delta=seen_delta,
-        _next_frontier_factory=_next_frontier,
-        metrics={"round": round_no},
         _cached=[gated, pre, slotted],
     )
 
@@ -452,34 +410,3 @@ def retry_rows(
         (F.col("attempt") + 1).cast("int").alias("attempt"),
     )
 
-
-def fetched_projections(
-    fetched: DataFrame, round_no: int, max_attempts: int = DEFAULT_MAX_ATTEMPTS
-) -> dict[str, DataFrame]:
-    """Column projections of one round's fetched superset — the single
-    fetched snapshot serves as fetch log, documents table, and seen
-    delta; parquet column pruning makes each read touch only its
-    columns.  documents keeps only ok rows (a failed fetch yields no
-    page); seen_delta keeps RESOLVED rows only, so pending retries
-    stay schedulable."""
-    return {
-        "fetch_log": fetched.select(
-            F.lit(round_no).alias("round"),
-            "slot",
-            "host",
-            F.col("doc_id").alias("url"),
-            "url_hash",
-            "priority",
-            "depth",
-            "attempt",
-            "ok",
-        ),
-        "documents": fetched.filter(F.col("ok")).select(
-            "doc_id", "spans", F.lit(round_no).alias("round")
-        ),
-        "seen_delta": fetched.filter(resolved_filter(max_attempts)).select(
-            "url_hash",
-            F.col("doc_id").alias("url"),
-            F.lit(round_no).alias("first_round"),
-        ),
-    }

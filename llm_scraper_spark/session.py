@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory holding the ``llm_scraper_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "llm-scraper-spark",
@@ -60,6 +63,10 @@ def get_spark(
             builder.config(
                 "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
             )
+            # the Python workers import this package (UDFs, fetch
+            # kernel); a driver script run from outside the repo root
+            # has it on sys.path but its workers would not
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
             # Throughput batch workload → ParallelGC.  G1 (the default)
             # with a large heap was measured entering concurrent-cycle
             # churn on this workload's allocation pattern (Arrow batches +

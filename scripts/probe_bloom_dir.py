@@ -10,7 +10,7 @@ At 10^10 URLs / 1% fpp the bitmap is ~11.2 GB (9.59 bits/URL); this
 probe sizes the same shard geometry at 4+ GB, which is past any
 plausible broadcast/collect ceiling, and exercises exactly the code
 path a real 10^10 deployment would run (build_bloom_dir /
-with_bloom_flag / compact_bloom_dir).
+absorb_bloom_dir / with_bloom_flag / compact_bloom_dir).
 
     python -m scripts.probe_bloom_dir --capacity 4000000000 \
         --shards 256 --rows 20000000 --out BLOOM_PROBE.json
@@ -94,12 +94,7 @@ def main() -> None:
         )
 
         t0 = time.monotonic()
-        B.build_bloom_dir(
-            hashes(args.delta_rows, 10**12),
-            capacity=0,
-            path=path,
-            append_to=bd,
-        )
+        B.absorb_bloom_dir(hashes(args.delta_rows, 10**12), bd)
         out["absorb_sec"] = round(time.monotonic() - t0, 2)
 
         # probe: all inserted rows must flag maybe=True; fresh rows

@@ -1,75 +1,74 @@
-"""The two per-round bloom absorb paths must be bit-identical.
-
-`Crawler._bloom_absorb` folds a round's delta driver-side (pyarrow +
-numpy) below SPARK_GRAFT_BLOOM_LOCAL_ABSORB_MAX and as a distributed
-partial-bitmap build above it (crawler.py).  Both must produce the same
-bitmap: the prefilter's correctness contract (no false negatives) rides
-on the probe positions, so the paths are compared word-for-word on the
-same crawl.
+"""The crawler's driver-side bloom fold must produce exactly the bitmap
+that `BloomFilter.add` gives over the committed seen set read through
+Spark (`Crawler.seen_df`, the independent reference): after the
+incremental per-round absorbs, and after a resume rebuild over a
+compacted base plus the deltas since it.  The prefilter's correctness
+contract (no false negatives) rides on the probe positions, so the
+bitmaps are compared word-for-word.
 """
 
-import os
-
 import numpy as np
-import pytest
 
+from llm_scraper_spark.functions.bloom import BloomFilter
 from llm_scraper_spark.plans.crawler import Crawler
 from llm_scraper_spark.sources.synthweb import robots_rows, seed_urls
 
 
-def _run_crawl(spark, wd, rounds=3):
-    c = Crawler(spark, str(wd), budget_ms=2000, use_bloom=True)
+def _run_crawl(spark, wd, rounds=3, **kw):
+    c = Crawler(spark, str(wd), budget_ms=2000, use_bloom=True, **kw)
     c.init_state(seed_urls(150), robots_rows())
     c.run(max_rounds=rounds)
     return c
 
 
-def test_driver_side_absorb_matches_distributed(spark, tmp_path, monkeypatch):
-    # force the driver-side path (threshold far above any delta)
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_LOCAL_ABSORB_MAX", "100000000")
-    c_local = _run_crawl(spark, tmp_path / "local")
-    # force the distributed path (threshold below every delta)
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_LOCAL_ABSORB_MAX", "-1")
-    c_dist = _run_crawl(spark, tmp_path / "dist")
-
-    assert c_local._bloom is not None and c_dist._bloom is not None
-    assert c_local._bloom.m_bits == c_dist._bloom.m_bits
-    assert c_local._bloom.k == c_dist._bloom.k
-    assert np.array_equal(c_local._bloom.words, c_dist._bloom.words)
-
-
-def test_resume_rebuild_matches_distributed_over_compacted_base(
-    spark, tmp_path, monkeypatch
-):
-    # a resume rebuilds the bloom from the committed seen set — with a
-    # compacted base in play, the driver-side fold must read base +
-    # deltas exactly as the distributed seen_df build does
-    blooms = {}
-    for mode, local_max in (("local", "100000000"), ("dist", "-1")):
-        monkeypatch.setenv("SPARK_GRAFT_BLOOM_LOCAL_ABSORB_MAX", local_max)
-        wd = tmp_path / mode
-        c = Crawler(spark, str(wd), budget_ms=2000, use_bloom=True, compact_every=1)
-        c.init_state(seed_urls(150), robots_rows())
-        c.run(max_rounds=2)
-        # fresh instance = resume path: _bloom_rebuild from manifests
-        c2 = Crawler(spark, str(wd), budget_ms=2000, use_bloom=True, compact_every=1)
-        c2.run(max_rounds=3)
-        assert c2._bloom is not None
-        blooms[mode] = c2._bloom
-    assert blooms["local"].m_bits == blooms["dist"].m_bits
-    assert blooms["local"].k == blooms["dist"].k
-    assert np.array_equal(blooms["local"].words, blooms["dist"].words)
-
-
-def test_absorb_covers_all_seen_urls(spark, tmp_path, monkeypatch):
-    # no-false-negative contract: every committed seen url_hash probes
-    # positive after driver-side absorbs (rebuild-free rounds included)
-    monkeypatch.setenv("SPARK_GRAFT_BLOOM_LOCAL_ABSORB_MAX", "100000000")
-    c = _run_crawl(spark, tmp_path / "cover")
+def _seen_hashes(c):
     last = c.last_committed_round()
-    hashes = np.array(
+    return np.array(
         [r["url_hash"] for r in c.seen_df(last).select("url_hash").collect()],
         dtype=np.uint64,
     )
+
+
+def _assert_matches_spark_reference(c):
+    assert c._bloom is not None
+    ref = BloomFilter.empty(c._bloom_cap)
+    ref.add(_seen_hashes(c))
+    assert (c._bloom.m_bits, c._bloom.k) == (ref.m_bits, ref.k)
+    assert np.array_equal(c._bloom.words, ref.words)
+
+
+def test_driver_side_absorb_matches_distributed(spark, tmp_path, monkeypatch):
+    rebuilds = []
+    rebuild = Crawler._bloom_rebuild
+
+    def counted(self, upto_round, seen_rows):
+        rebuilds.append(upto_round)
+        rebuild(self, upto_round, seen_rows)
+
+    monkeypatch.setattr(Crawler, "_bloom_rebuild", counted)
+    c = _run_crawl(spark, tmp_path / "wd", rounds=4)
+    # at least one round was absorbed into the existing bitmap, not
+    # rebuilt — else this compares only the rebuild path
+    assert len(rebuilds) < c.last_committed_round() + 1, rebuilds
+    _assert_matches_spark_reference(c)
+
+
+def test_resume_rebuild_matches_distributed_over_compacted_base(spark, tmp_path):
+    wd = tmp_path / "wd"
+    # compact_every=2: round 1 writes the base, round 2 is a delta on it
+    c = _run_crawl(spark, wd, rounds=3, compact_every=2)
+    assert c.last_committed_round() == 2 and c.latest_compact_round(2) == 1
+    # fresh instance = resume path; no round left to run, so its bloom
+    # is exactly the rebuild from the committed base + deltas
+    c2 = Crawler(spark, str(wd), budget_ms=2000, use_bloom=True, compact_every=2)
+    assert c2.run(max_rounds=3) == []
+    _assert_matches_spark_reference(c2)
+
+
+def test_absorb_covers_all_seen_urls(spark, tmp_path):
+    # no-false-negative contract: every committed seen url_hash probes
+    # positive after driver-side absorbs (rebuild-free rounds included)
+    c = _run_crawl(spark, tmp_path / "cover")
+    hashes = _seen_hashes(c)
     assert len(hashes) > 0
     assert bool(c._bloom.maybe_contains(hashes).all())

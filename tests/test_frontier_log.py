@@ -9,7 +9,8 @@ the schedule/seen equality already pinned by tests/test_band_prune.py:
   cost ZERO IO per round (the previous design re-read + re-wrote them
   every round).
 * GC — after a run, frontier_log/ holds exactly the last manifest's
-  live units (consumed and compacted-away dirs are deleted).
+  live units (consumed and compacted-away dirs are deleted), also after
+  a crash between a commit and its GC.
 * COMPACTION — the periodic fold bounds the live-generation count,
   preserves the fetch schedule exactly, and survives resume.
 """
@@ -109,6 +110,49 @@ def test_gc_leaves_exactly_live_units(spark, tmp_path):
             if name.startswith("_band="):
                 on_disk.add((g, int(name.split("=")[1])))
     assert on_disk == live
+
+
+def _units_on_disk(wd):
+    flog = os.path.join(wd, "frontier_log")
+    return {
+        (int(g[1 : -len(".parquet")]), int(name.split("=")[1]))
+        for g in os.listdir(flog)
+        for name in os.listdir(os.path.join(flog, g))
+        if name.startswith("_band=")
+    }
+
+
+def _seen(c):
+    return {
+        (r.url_hash, r.url)
+        for r in c.seen_df(c.last_committed_round()).collect()
+    }
+
+
+def test_resume_deletes_units_orphaned_by_a_crash_before_gc(spark, tmp_path):
+    whole, _ = _run(spark, str(tmp_path / "whole"), rounds=3)
+    wd = str(tmp_path / "crashed")
+    c = Crawler(spark, wd, budget_ms=500, salt_buckets=4,
+                fetch_partitions=4, band_prune=True)
+    c.init_state(seed_urls(2000), robots_rows())
+    # every commit "crashes" before its GC: the consumed units of both
+    # committed rounds stay on disk
+    c._gc_frontier = lambda live: None
+    c.run(max_rounds=2)
+    live = {_unit_key(u) for u in _manifests(wd)[-1]["frontier_log"]["live"]}
+    orphans = _units_on_disk(wd) - live
+    assert orphans
+    c2 = Crawler(spark, wd, budget_ms=500, salt_buckets=4,
+                 fetch_partitions=4, band_prune=True)
+    ms = c2.run(max_rounds=3)
+    assert [m["round"] for m in ms] == [2]
+    assert not (_units_on_disk(wd) & orphans)
+    assert _units_on_disk(wd) == {
+        _unit_key(u) for u in ms[-1]["frontier_log"]["live"]
+    }
+    assert _fetch_schedule(spark, str(tmp_path / "whole"), 3) == \
+        _fetch_schedule(spark, wd, 3)
+    assert _seen(whole) == _seen(c2)
 
 
 def test_compaction_bounds_generations_and_preserves_schedule(

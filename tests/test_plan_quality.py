@@ -122,46 +122,16 @@ def test_text_quality_prunes_columns(spark):
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in scan
 
 
-def test_crawl_seen_antijoin_never_broadcasts_seen(spark):
-    """The frontier⟕seen anti-join must stay a shuffle join: the seen
-    set grows with the crawl and may never become an in-heap
-    HashedRelation (frontier.py discipline).  Every LeftAnti in the
-    round plan must be a ShuffledHashJoin."""
-    from llm_scraper_spark import schemas
-    from llm_scraper_spark.operators.frontier import run_round
-    from llm_scraper_spark.plans.crawler import seeds_to_frontier
-    from llm_scraper_spark.sources.synthweb import robots_rows, seed_urls
+def _round0_next_frontier_plan(spark, seen_rows=None) -> str:
+    """Physical plan of round 0's next frontier (deferred ∪ retries ∪
+    new links) over a 50-seed web, composed the way Crawler.run
+    composes it: run_round, then frontier_delta over its outputs."""
+    from pyspark.sql import functions as F
 
-    frontier = seeds_to_frontier(spark, seed_urls(50))
-    seen = frontier.select("url_hash", "url").limit(0)
-    robots = spark.createDataFrame(robots_rows(), schemas.ROBOTS)
-    res = run_round(
-        spark,
-        frontier,
-        seen,
-        robots,
-        round_no=0,
-        budget_ms=2000,
-        salt_buckets=4,
-        use_bloom=False,
-        bloom=None,
-        fetch_partitions=4,
-    )
-    plan = res.next_frontier._jdf.queryExecution().executedPlan().toString()
-    anti_lines = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
-    assert anti_lines, "round plan lost its seen anti-joins"
-    for ln in anti_lines:
-        assert "ShuffledHashJoin" in ln, f"anti-join not shuffle-hash: {ln}"
-
-
-def test_crawl_seen_antijoin_switches_to_sort_merge_at_scale(spark):
-    """r4 probe fix: SHJ cannot spill its build side, and the 10^7-seed
-    probe OOM'd the next-frontier anti-join's hash build at seen ≈ 7M
-    rows.  Past SEEN_SHJ_MAX_ROWS every seen-side LeftAnti must plan as
-    SortMergeJoin (spillable) — and still never broadcast."""
     from llm_scraper_spark import schemas
     from llm_scraper_spark.operators.frontier import (
-        SEEN_SHJ_MAX_ROWS,
+        frontier_delta,
+        retry_rows,
         run_round,
     )
     from llm_scraper_spark.plans.crawler import seeds_to_frontier
@@ -178,12 +148,45 @@ def test_crawl_seen_antijoin_switches_to_sort_merge_at_scale(spark):
         round_no=0,
         budget_ms=2000,
         salt_buckets=4,
-        use_bloom=False,
         bloom=None,
         fetch_partitions=4,
-        seen_rows=SEEN_SHJ_MAX_ROWS + 1,
+        seen_rows=seen_rows,
     )
-    plan = res.next_frontier._jdf.queryExecution().executedPlan().toString()
+    seen_delta = res.fetched.select(
+        "url_hash", F.col("doc_id").alias("url")
+    ).unionByName(res.blocked.select("url_hash", "url"))
+    retries = retry_rows(res.fetched, 0)
+    next_frontier = res.deferred.unionByName(retries).unionByName(
+        frontier_delta(
+            res.fetched, seen, seen_delta, res.deferred, round_no=0,
+            retries=retries, seen_rows=seen_rows,
+        )
+    )
+    plan = next_frontier._jdf.queryExecution().executedPlan().toString()
+    res.unpersist()
+    return plan
+
+
+def test_crawl_seen_antijoin_never_broadcasts_seen(spark):
+    """The frontier⟕seen anti-join must stay a shuffle join: the seen
+    set grows with the crawl and may never become an in-heap
+    HashedRelation (frontier.py discipline).  Every LeftAnti in the
+    round plan must be a ShuffledHashJoin."""
+    plan = _round0_next_frontier_plan(spark)
+    anti_lines = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+    assert anti_lines, "round plan lost its seen anti-joins"
+    for ln in anti_lines:
+        assert "ShuffledHashJoin" in ln, f"anti-join not shuffle-hash: {ln}"
+
+
+def test_crawl_seen_antijoin_switches_to_sort_merge_at_scale(spark):
+    """r4 probe fix: SHJ cannot spill its build side, and the 10^7-seed
+    probe OOM'd the next-frontier anti-join's hash build at seen ≈ 7M
+    rows.  Past SEEN_SHJ_MAX_ROWS every seen-side LeftAnti must plan as
+    SortMergeJoin (spillable) — and still never broadcast."""
+    from llm_scraper_spark.operators.frontier import SEEN_SHJ_MAX_ROWS
+
+    plan = _round0_next_frontier_plan(spark, seen_rows=SEEN_SHJ_MAX_ROWS + 1)
     anti_lines = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
     assert anti_lines, "round plan lost its seen anti-joins"
     for ln in anti_lines:

@@ -49,7 +49,6 @@ def test_hot_host_spreads_over_salt_buckets(spark):
         budget_ms=10**9,  # politeness off: isolate the partitioning
         salt_buckets=SALT_BUCKETS,
         fetch_partitions=FETCH_PARTITIONS,
-        use_bloom=False,
     )
     fetched = res.fetched
 
