@@ -156,6 +156,13 @@ def run_round(
     on (host, salt) where salt = url_hash % salt_buckets, so one hot
     host spreads over ``salt_buckets`` partitions instead of one.
 
+    ``fetch_partitions``: None (the default) lets AQE size the fetch
+    stage — the (host, salt) exchange is column-keyed only, and AQE
+    coalesces it from its map statistics, so a few-thousand-URL round
+    runs a few Python fetch tasks rather than one per shuffle partition
+    (each Python task has a fixed worker round-trip cost).  An explicit
+    value pins exactly that many fetch partitions.
+
     ``bloom``: the URL-seen prefilter; None plans the exact anti-join
     alone.
 
@@ -171,8 +178,6 @@ def run_round(
     once, then derive — correctness survives re-execution only because
     the synthetic fetch is deterministic.
     """
-    if fetch_partitions is None:
-        fetch_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # frontiers written before the retry column existed (or built by
     # hand in tests) normalize to attempt 0
     if "attempt" not in frontier.columns:
@@ -279,8 +284,10 @@ def run_round(
     # canonicalize pipeline inside AQE broadcast-build jobs at higher
     # core counts (cache reuse is best-effort; snapshot reads are
     # structural).
+    # no count → a column-keyed exchange that AQE coalesces; a count pins it
+    width = [] if fetch_partitions is None else [fetch_partitions]
     fetched = (
-        to_fetch.repartition(fetch_partitions, F.col("host"), F.col("_salt"))
+        to_fetch.repartition(*width, F.col("host"), F.col("_salt"))
         .drop("_salt")
         .mapInPandas(_fetch_map_factory(fail_mod, fail_attempts), _FETCH_SCHEMA)
     )

@@ -77,6 +77,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .. import schemas
 from ..functions.urls import canonicalize_col, host_col, url_hash_col
@@ -206,6 +207,8 @@ class Crawler:
         self.budget_ms = budget_ms
         self.salt_buckets = salt_buckets
         self.use_bloom = use_bloom
+        # None: AQE sizes each round's fetch stage from its rows; a
+        # count pins that many fetch partitions (and snapshot files)
         self.fetch_partitions = fetch_partitions
         # bounded-retry config (SURVEY §2.9, the reference's RETRIES=3
         # analog): fail_mod>0 turns on the deterministic transient-
@@ -968,11 +971,15 @@ class Crawler:
         # disproportionately).  Both jobs share the persisted `gated`
         # frame; concurrent first-materialization of a cached partition
         # is BlockManager-locked (one computes, the other waits).  The
-        # blocked write's time is part of the write_fetched phase.
+        # blocked write's time is part of the write_fetched phase.  The
+        # pool threads inherit the caller's job tags and Spark local
+        # properties (job group, description, scheduler pool), so both
+        # write jobs are tagged like the rest of the round.
+        write = inheritable_thread_target(self.spark)(self._write_snapshot)
         with ThreadPoolExecutor(2) as pool:
             futs = [
-                pool.submit(self._write_snapshot, rd.res.fetched, "fetch", rd.r),
-                pool.submit(self._write_snapshot, rd.res.blocked, "blocked", rd.r),
+                pool.submit(write, rd.res.fetched, "fetch", rd.r),
+                pool.submit(write, rd.res.blocked, "blocked", rd.r),
             ]
             for fut in futs:
                 fut.result()

@@ -15,6 +15,15 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_driver_mem() -> str:
+    """Local-mode driver heap when ``SPARK_DRIVER_MEM`` is unset: the
+    smaller of 16g and half the host's physical memory, in whole GB,
+    at least 1g — a heap the machine can back next to the Python
+    workers."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "llm-scraper-spark",
     cores: int | str | None = None,
@@ -28,7 +37,18 @@ def get_spark(
     - Arrow on: every Python-side transform is an Arrow-batched pandas
       UDF (input_hint forbids per-row Python).
     - shuffle.partitions sized to cores (local) — on a real cluster this
-      is overridden per deployment; AQE coalesces the excess.
+      is overridden per deployment.  It is an upper bound: AQE
+      coalesces the partitions of every join, aggregate, window and
+      column-keyed ``repartition(cols)`` exchange to the size of its
+      map output.  It never coalesces ``repartition(n, ...)``, which
+      pins n partitions.
+    - ``canChangeCachedPlanOutputPartitioning`` on (Spark's default is
+      off): a persisted frame's plan is then AQE-optimized too.  With
+      it off, the frames a crawl round persists (``run_round``'s
+      ``gated``/``pre``/``slotted``) keep all shuffle.partitions
+      partitions and every stage downstream of them inherits that
+      width: a round of a few thousand URLs runs hundreds of
+      near-empty tasks and writes one file per partition.
     - ``cluster=True`` is the ``spark-submit`` path: the master comes
       from ``--master`` (code must NOT set one — a code-side master
       silently overrides the submit flag), and driver memory / GC
@@ -52,6 +72,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -61,7 +84,8 @@ def get_spark(
     if not cluster:
         builder = (
             builder.config(
-                "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
+                "spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(),
             )
             # the Python workers import this package (UDFs, fetch
             # kernel); a driver script run from outside the repo root

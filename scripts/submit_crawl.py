@@ -44,7 +44,7 @@ def main() -> None:
     ap.add_argument("--salt-buckets", type=int, default=32)
     ap.add_argument("--fetch-partitions", type=int, default=None,
                     help="python fetch-worker parallelism; default: "
-                         "spark.default.parallelism")
+                         "sized by AQE from each round's rows")
     ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--max-attempts", type=int, default=3,
                     help="bounded-retry cap: failed fetches re-enter the "

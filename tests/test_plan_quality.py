@@ -167,6 +167,49 @@ def _round0_next_frontier_plan(spark, seen_rows=None) -> str:
     return plan
 
 
+def _fetch_exchange_lines(spark, fetch_partitions) -> list[str]:
+    """The user-requested (host, _salt) exchange lines of round 0's
+    fetch plan over a 50-seed web (the politeness window's own
+    exchange on the same key is ENSURE_REQUIREMENTS)."""
+    from llm_scraper_spark import schemas
+    from llm_scraper_spark.operators.frontier import run_round
+    from llm_scraper_spark.plans.crawler import seeds_to_frontier
+    from llm_scraper_spark.sources.synthweb import robots_rows, seed_urls
+
+    frontier = seeds_to_frontier(spark, seed_urls(50))
+    res = run_round(
+        spark,
+        frontier,
+        frontier.select("url_hash", "url").limit(0),
+        spark.createDataFrame(robots_rows(), schemas.ROBOTS),
+        round_no=0,
+        salt_buckets=4,
+        fetch_partitions=fetch_partitions,
+    )
+    plan = res.fetched._jdf.queryExecution().executedPlan().toString()
+    res.unpersist()
+    return [
+        ln for ln in plan.splitlines()
+        if "Exchange hashpartitioning(host" in ln and "REPARTITION_BY" in ln
+    ]
+
+
+def test_default_fetch_exchange_is_coalescable(spark):
+    """With no fetch_partitions the fetch exchange is column-keyed
+    (REPARTITION_BY_COL), which AQE coalesces to the round's size; an
+    explicit count pins it (REPARTITION_BY_NUM, never coalesced)."""
+    (default,) = _fetch_exchange_lines(spark, None)
+    assert "REPARTITION_BY_COL" in default, default
+    (pinned,) = _fetch_exchange_lines(spark, 4)
+    assert "REPARTITION_BY_NUM" in pinned and ", 4)" in pinned, pinned
+
+
+def test_cached_plans_may_change_output_partitioning(spark):
+    """AQE sizes the frames a crawl round persists too."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert spark.conf.get(key) == "true"
+
+
 def test_crawl_seen_antijoin_never_broadcasts_seen(spark):
     """The frontier⟕seen anti-join must stay a shuffle join: the seen
     set grows with the crawl and may never become an in-heap
