@@ -923,12 +923,10 @@ class Crawler:
                 prune_info=info,
             )
         fpath = self._p("frontier", f"r{r}.parquet")
-        if not os.path.isdir(fpath):
+        # emptiness from the footers: no Spark job
+        if not sum(p["rows"] for p in _parquet_partition_rows(fpath)):
             return None
-        frontier = self.spark.read.parquet(fpath)
-        if not frontier.head(1):
-            return None
-        return _Round(r, frontier, None)
+        return _Round(r, self.spark.read.parquet(fpath), None)
 
     def _plan(self, rd: _Round, robots: DataFrame, seen_rows: int) -> None:
         if rd.res is not None:

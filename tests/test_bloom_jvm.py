@@ -8,13 +8,12 @@ import numpy as np
 from llm_scraper_spark.functions.bloom import BloomFilter, with_bloom_flag
 
 
-def test_jvm_probe_matches_numpy(spark):
-    rng = np.random.default_rng(7)
-    added = rng.integers(0, 1 << 62, size=5000, dtype=np.int64)
-    probes = np.concatenate(
-        [added[:2500], rng.integers(0, 1 << 62, size=5000, dtype=np.int64)]
-    )
-    bf = BloomFilter.empty(capacity=5000, fpp=0.01)
+def _assert_jvm_probe_matches_numpy(spark, added, seen, fresh):
+    """Probe ``seen`` (a prefix of ``added``) then ``fresh``: the JVM
+    probe flags exactly what ``maybe_contains`` flags, with no false
+    negatives on ``seen`` and ~1% fpp on ``fresh``."""
+    probes = np.concatenate([seen, fresh])
+    bf = BloomFilter.empty(capacity=len(added), fpp=0.01)
     bf.add(added.astype(np.uint64))
     want = bf.maybe_contains(probes.astype(np.uint64)).tolist()
     df = spark.createDataFrame([(int(h),) for h in probes], "url_hash long")
@@ -24,9 +23,28 @@ def test_jvm_probe_matches_numpy(spark):
     ]
     assert got == want
     # no false negatives: everything added must be flagged
-    assert all(want[:2500])
-    # ~1% fpp on the fresh half, with slack
-    assert sum(want[2500:]) < 5000 * 0.05
+    assert all(want[: len(seen)])
+    # ~1% fpp on the fresh part, with slack
+    assert sum(want[len(seen):]) < len(fresh) * 0.05
+
+
+def test_jvm_probe_matches_numpy(spark):
+    rng = np.random.default_rng(7)
+    added = rng.integers(0, 1 << 62, size=5000, dtype=np.int64)
+    fresh = rng.integers(0, 1 << 62, size=5000, dtype=np.int64)
+    _assert_jvm_probe_matches_numpy(spark, added, added[:2500], fresh)
+
+
+def test_jvm_probe_matches_numpy_top_bit(spark):
+    """Hashes with bit 63 set (negative as int64): outside the 63-bit
+    url_hash contract, but the filter accepts arbitrary hashes.  Both
+    probes mask bit 63 before mixing; an unmasked sign bit would leak
+    into the JVM's arithmetic ``shiftright`` and move its positions."""
+    rng = np.random.default_rng(23)
+    top = np.int64(-(1 << 63))
+    added = rng.integers(0, 1 << 62, size=3000, dtype=np.int64) | top
+    fresh = rng.integers(0, 1 << 62, size=3000, dtype=np.int64) | top
+    _assert_jvm_probe_matches_numpy(spark, added, added, fresh)
 
 
 def test_staged_bitmaps_scoped_per_bloom(spark):

@@ -13,6 +13,9 @@ the schedule/seen equality already pinned by tests/test_band_prune.py:
   a crash between a commit and its GC.
 * COMPACTION — the periodic fold bounds the live-generation count,
   preserves the fetch schedule exactly, and survives resume.
+* MIGRATION — resuming a plain-mode workdir in band_prune mode turns
+  its per-round frontier snapshot into generation 0 and crawls on as
+  if the whole crawl had run plain.
 """
 
 import json
@@ -153,6 +156,28 @@ def test_resume_deletes_units_orphaned_by_a_crash_before_gc(spark, tmp_path):
     assert _fetch_schedule(spark, str(tmp_path / "whole"), 3) == \
         _fetch_schedule(spark, wd, 3)
     assert _seen(whole) == _seen(c2)
+
+
+def test_band_prune_resume_migrates_a_plain_frontier(spark, tmp_path):
+    kw = dict(budget_ms=500, salt_buckets=4, fetch_partitions=4)
+    whole = Crawler(spark, str(tmp_path / "whole"), **kw)
+    whole.init_state(seed_urls(300), robots_rows())
+    whole.run(max_rounds=4)
+    wd = str(tmp_path / "migrated")
+    plain = Crawler(spark, wd, **kw)
+    plain.init_state(seed_urls(300), robots_rows())
+    plain.run(max_rounds=2)
+    assert os.path.isdir(os.path.join(wd, "frontier", "r2.parquet"))
+    assert not os.path.exists(os.path.join(wd, "frontier_log"))
+    c2 = Crawler(spark, wd, band_prune=True, **kw)
+    ms = c2.run(max_rounds=4)
+    assert [m["round"] for m in ms] == [2, 3]
+    assert _fetch_schedule(spark, str(tmp_path / "whole"), 4) == \
+        _fetch_schedule(spark, wd, 4)
+    assert _seen(whole) == _seen(c2)
+    assert _units_on_disk(wd) == {
+        _unit_key(u) for u in ms[-1]["frontier_log"]["live"]
+    }
 
 
 def test_compaction_bounds_generations_and_preserves_schedule(

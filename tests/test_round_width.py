@@ -3,7 +3,9 @@
 With AQE sizing the fetch exchange and the round's persisted frames, a
 200-seed round runs a few tasks per stage instead of one per shuffle
 partition: each Python fetch task and each near-empty task costs a
-fixed scheduling and worker round-trip, whatever its row count.
+fixed scheduling and worker round-trip, whatever its row count.  For
+the same reason a round starts no job it does not need: the plain
+frontier's emptiness is read from its parquet footers.
 """
 
 from __future__ import annotations
@@ -35,20 +37,50 @@ def _group_tasks(sc) -> tuple[int, int]:
     return sum(i.numTasks for i in ran), len(ran)
 
 
-def test_one_round_runs_within_task_budget(spark, tmp_path):
-    sc = spark.sparkContext
-    crawler = Crawler(spark, str(tmp_path), budget_ms=2000)
-    crawler.init_state(seed_urls(200), robots_rows())
-    sc.setJobGroup(GROUP, "one 200-seed crawl round")
+def _in_group(sc, group: str, action):
+    """``action()`` with its jobs tagged ``group``.  Returns once the
+    jobs' start events are in the status tracker (they arrive through
+    the listener bus, after the action returns)."""
+    sc.setJobGroup(group, group)
     try:
-        (manifest,) = crawler.run(max_rounds=1)
+        return action()
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_one_round_runs_within_task_budget(spark, tmp_path):
+    sc = spark.sparkContext
+    crawler = Crawler(spark, str(tmp_path), budget_ms=2000)
+    crawler.init_state(seed_urls(200), robots_rows())
+    (manifest,) = _in_group(sc, GROUP, lambda: crawler.run(max_rounds=1))
     assert manifest["fetched"] > 0
     tasks, stages = _group_tasks(sc)
     assert tasks <= ROUND_TASK_BUDGET, (tasks, stages)
     fetch_dir = os.path.join(str(tmp_path), "fetch", "r0.parquet")
     parts = [f for f in os.listdir(fetch_dir) if f.startswith("part-")]
     assert 1 <= len(parts) <= sc.defaultParallelism, parts
+
+
+def test_plain_frontier_emptiness_check_runs_no_job(spark, tmp_path):
+    sc = spark.sparkContext
+    crawler = Crawler(spark, str(tmp_path), budget_ms=2000)
+    crawler.init_state(seed_urls(50), robots_rows())
+    r0 = os.path.join(str(tmp_path), "frontier", "r0.parquet")
+    spark.read.parquet(r0).limit(0).write.parquet(
+        os.path.join(str(tmp_path), "frontier", "r1.parquet")
+    )
+    _in_group(sc, "frontier-read", lambda: spark.read.parquet(r0))
+    full = _in_group(sc, "frontier-r0", lambda: crawler._read_frontier(0, 0))
+    empty = _in_group(sc, "frontier-r1", lambda: crawler._read_frontier(1, 0))
+    jobs = {
+        g: len(sc.statusTracker().getJobIdsForGroup(g))
+        for g in ("frontier-read", "frontier-r0", "frontier-r1")
+    }
+    # a bare read's own jobs (schema inference), and nothing more
+    assert jobs["frontier-r0"] <= jobs["frontier-read"], jobs
+    assert jobs["frontier-r1"] == 0, jobs
+    assert full is not None and full.frontier.count() == 50
+    assert empty is None
