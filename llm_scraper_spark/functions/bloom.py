@@ -9,7 +9,7 @@ with a mostly-fresh frontier this removes the dominant shuffle.
 
 One filter type, ``BloomFilter``: one numpy bitmap on the driver,
 folded from the seen set's url_hash column (plans/crawler), shipped to
-the JVM as a one-row parquet table (``bitmap_df``) and broadcast into
+the JVM as a one-row Arrow table (``bitmap_df``) and broadcast into
 one codegen'd probe expression (``bloom_probe_col``).  The numpy probe
 (``BloomFilter.maybe_contains``) computes the same bit positions and is
 the reference the JVM probe is tested against (tests/test_bloom_jvm.py).
@@ -69,8 +69,9 @@ class BloomFilter:
         # unbuffered read-modify-write ufunc (~10 M probes/s); a plain
         # fancy store into a bool bitmap + one packbits pass is ~10x
         # faster and bit-identical (duplicates just store True twice).
-        # Gated on bitmap size: the bool temp costs m_bits BYTES, so
-        # past 128 MB (cap ~10^9 bits) fall back to the in-place path.
+        # Gated on bitmap size: the bool temp costs m_bits BYTES (1 GiB
+        # at the 2^30-bit gate, 8x the 128 MiB bitmap itself), so past
+        # 2^30 bits fall back to the in-place path.
         if self.m_bits <= (1 << 30) and idx.size >= 4096:
             bits = np.zeros(self.m_bits, dtype=bool)
             bits[idx.astype(np.int64)] = True
@@ -99,14 +100,17 @@ class BloomFilter:
 def bitmap_df(spark: SparkSession, bloom: BloomFilter) -> DataFrame:
     """The bitmap as a ONE-ROW DataFrame ``(_bloom_arr array<bigint>)``.
 
-    The words ship driver→JVM as a tiny parquet file written with
-    pyarrow and read back by Spark — one mmap'd columnar batch.  (Two
-    earlier versions were measured pathological: raw bytes unpacked
-    with ``transform(...substring(raw, ...))`` re-copies the ENTIRE
-    blob per element on UnsafeRows — O(n_words × blob_size) ≈ 50 GB of
-    memcpy at a 230 KB bitmap; and createDataFrame's pickle path costs
-    4-9 s of serial driver time per round at a 3 MB bitmap, which at
-    two measured cluster sizes shows up directly as lost scaling
+    The words ship driver→JVM as one Arrow batch (a ``pyarrow.Table``
+    handed to createDataFrame), copied at call time: the frame is a
+    self-contained snapshot that later ``add`` calls, later ships or
+    the bloom's collection never touch, and it needs no file an
+    executor must be able to read.  (Two earlier versions were
+    measured pathological: raw bytes unpacked with
+    ``transform(...substring(raw, ...))`` re-copies the ENTIRE blob per
+    element on UnsafeRows — O(n_words × blob_size) ≈ 50 GB of memcpy at
+    a 230 KB bitmap; and createDataFrame's pickle path costs 4-9 s of
+    serial driver time per round at a 3 MB bitmap, which at two
+    measured cluster sizes shows up directly as lost scaling
     efficiency.)
 
     The bitmap must reach the probe as a broadcast-joined COLUMN, not
@@ -115,75 +119,11 @@ def bitmap_df(spark: SparkSession, bloom: BloomFilter) -> DataFrame:
     As a join-side attribute the generated code is a bound reference —
     constant-size — and the array lives once in the broadcast, never
     copied per row."""
-    words = np.asarray(bloom.words, dtype=np.uint64).view(np.int64)
     import pyarrow as pa
 
+    words = np.asarray(bloom.words, dtype=np.uint64).view(np.int64)
     arr = pa.array([words], type=pa.list_(pa.int64()))
-    table = pa.Table.from_arrays([arr], names=["_bloom_arr"])
-    return _ship_table(spark, table, "_bloom_arr array<bigint>", owner=bloom)
-
-
-#: process-lifetime staging dir for bitmap ships — created lazily,
-#: removed at interpreter exit.  Staged files are retained PER BLOOM
-#: OBJECT: each owner keeps its 2 most recent ships (the previous
-#: round's bitmap may still be lazily referenced until its round
-#: commits — the crawler re-ships the same mutated object every
-#: round), and a ``weakref.finalize`` removes the owner's remaining
-#: files when the object is collected.  Scoping retention to the
-#: owner means two Crawler instances interleaving ships in one process
-#: can never delete each other's still-referenced files (the old
-#: process-global keep-2 could).
-#: Contract: a bitmap DataFrame is re-materializable only while its
-#: bloom object is alive and within 2 ships of it.
-#: ``SPARK_GRAFT_BLOOM_STAGE_DIR`` overrides the location for real
-#: clusters, where the stage dir must live on a filesystem the
-#: executors can read (HDFS/NFS/object-store mount) — a driver-local
-#: /tmp path only works in local mode.
-_STAGE_DIR: list[str | None] = [None]
-_STAGE_SEQ: list[int] = [0]
-
-
-def _remove_paths(paths: list) -> None:
-    import os
-
-    for p in paths:
-        try:
-            os.remove(p)
-        except OSError:
-            pass
-
-
-def _ship_table(spark: SparkSession, table, schema: str, owner) -> DataFrame:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import weakref
-
-    import pyarrow.parquet as pq
-
-    if _STAGE_DIR[0] is None:
-        env = os.environ.get("SPARK_GRAFT_BLOOM_STAGE_DIR")
-        if env:
-            os.makedirs(env, exist_ok=True)
-            _STAGE_DIR[0] = env
-        else:
-            _STAGE_DIR[0] = tempfile.mkdtemp(prefix="bloom_stage_")
-            atexit.register(shutil.rmtree, _STAGE_DIR[0], ignore_errors=True)
-    _STAGE_SEQ[0] += 1
-    path = os.path.join(
-        _STAGE_DIR[0], f"bloom_{id(owner):x}_{_STAGE_SEQ[0]:08d}.parquet"
-    )
-    pq.write_table(table, path, compression="snappy")
-    paths = getattr(owner, "_stage_paths", None)
-    if paths is None:
-        paths = []
-        owner._stage_paths = paths
-        # the finalizer captures the list, not the owner — no ref cycle
-        weakref.finalize(owner, _remove_paths, paths)
-    paths.append(path)
-    _remove_paths([paths.pop(0) for _ in range(max(0, len(paths) - 2))])
-    return spark.read.schema(schema).parquet(path)
+    return spark.createDataFrame(pa.Table.from_arrays([arr], names=["_bloom_arr"]))
 
 
 def bloom_probe_col(arr_sql: str, m_bits: int, k: int, hash_sql: str) -> "F.Column":

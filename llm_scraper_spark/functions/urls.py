@@ -1,4 +1,5 @@
-"""URL canonicalization + hashing — vectorized (Arrow pandas UDFs).
+"""URL canonicalization + hashing — pure Python (the oracle's) and
+JVM column expressions (the crawl's), equal by test.
 
 Replaces the reference's ad-hoc URL handling: ``href.startswith("/")``
 absolutization + set-dedup (extract_product_urls.py:114-132), urljoin /
@@ -105,21 +106,7 @@ def hash_series(urls: pd.Series) -> pd.Series:
     )
 
 
-def host_series(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: host_of(u) if u is not None else None)
-
-
 # ---- Spark column functions -------------------------------------------
-
-@F.pandas_udf(T.StringType())
-def canonicalize_udf(urls: pd.Series) -> pd.Series:
-    return canonicalize_series(urls)
-
-
-@F.pandas_udf(T.StringType())
-def canonicalize_with_base_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    return canonicalize_series(urls, bases)
-
 
 @F.pandas_udf(T.LongType())
 def url_hash_udf(urls: pd.Series) -> pd.Series:
@@ -142,8 +129,8 @@ def host_col(url_col):
 # column expressions implement the SAME canonical form as
 # ``canonicalize_one``/``url_hash_one`` (equality is property-tested in
 # tests/test_urls_jvm.py and implicitly by the crawl-vs-oracle suite,
-# since the oracle uses the Python versions).  The pandas UDFs above
-# remain for the oracle and for corpus corners the JVM parser rejects.
+# since the oracle uses the Python versions ``canonicalize_one`` /
+# ``url_hash_one``).  No crawl path falls back to a Python UDF.
 
 _MAX_LONG = 0x7FFF_FFFF_FFFF_FFFF
 

@@ -647,22 +647,31 @@ class Crawler:
         self.seen_df(r).write.mode("overwrite").parquet(tmp)
         os.rename(tmp, final)
 
+    def _seen_sources(
+        self, upto_round: int
+    ) -> tuple[str | None, list[str], list[str]]:
+        """Where seen_df(upto_round) reads from: the latest compacted
+        base (None before the first compaction), then the fetch and
+        blocked deltas committed since it."""
+        base_round = self.latest_compact_round(upto_round)
+        if base_round is None:
+            base, after = None, -1
+        else:
+            base = self._p("seen_compact", f"r{base_round}.parquet")
+            after = base_round
+        return (
+            base,
+            self._paths("fetch", upto_round, after_round=after),
+            self._paths("blocked", upto_round, after_round=after),
+        )
+
     def seen_df(self, upto_round: int) -> DataFrame:
         """Seen set = fetched ∪ robots-blocked over committed rounds —
         a compacted base snapshot (if one exists) plus the per-round
         delta projections since it (parquet reads only
         url_hash/url/round thanks to column pruning)."""
-        base_round = self.latest_compact_round(upto_round)
-        after = base_round if base_round is not None else -1
-        fetch_paths = self._paths("fetch", upto_round, after_round=after)
-        blocked_paths = self._paths("blocked", upto_round, after_round=after)
-        parts = []
-        if base_round is not None:
-            parts.append(
-                self.spark.read.parquet(
-                    self._p("seen_compact", f"r{base_round}.parquet")
-                )
-            )
+        base, fetch_paths, blocked_paths = self._seen_sources(upto_round)
+        parts = [self.spark.read.parquet(base)] if base else []
         if fetch_paths:
             snap = self.spark.read.parquet(*fetch_paths)
             if "ok" in snap.columns:
@@ -774,16 +783,9 @@ class Crawler:
         return rows
 
     def _seen_dirs(self, upto_round: int) -> list[str]:
-        """The parquet dirs whose union is seen_df(upto_round): the
-        latest compacted base plus fetch/blocked deltas since it."""
-        base_round = self.latest_compact_round(upto_round)
-        after = base_round if base_round is not None else -1
-        dirs = []
-        if base_round is not None:
-            dirs.append(self._p("seen_compact", f"r{base_round}.parquet"))
-        dirs += self._paths("fetch", upto_round, after_round=after)
-        dirs += self._paths("blocked", upto_round, after_round=after)
-        return dirs
+        """The parquet dirs whose union is seen_df(upto_round)."""
+        base, fetch_paths, blocked_paths = self._seen_sources(upto_round)
+        return ([base] if base else []) + fetch_paths + blocked_paths
 
     def _bloom_rebuild(self, upto_round: int, seen_rows: int) -> None:
         from ..functions.bloom import BloomFilter

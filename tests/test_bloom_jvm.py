@@ -3,9 +3,11 @@ correctness invariants (no false negatives)."""
 
 from __future__ import annotations
 
+import gc
+
 import numpy as np
 
-from llm_scraper_spark.functions.bloom import BloomFilter, with_bloom_flag
+from llm_scraper_spark.functions.bloom import BloomFilter, bitmap_df, with_bloom_flag
 
 
 def _assert_jvm_probe_matches_numpy(spark, added, seen, fresh):
@@ -47,19 +49,27 @@ def test_jvm_probe_matches_numpy_top_bit(spark):
     _assert_jvm_probe_matches_numpy(spark, added, added, fresh)
 
 
-def test_staged_bitmaps_scoped_per_bloom(spark):
-    """Two blooms interleaving ships must not delete each other's
-    staged files: each owner retains its own 2 most recent."""
-    from llm_scraper_spark.functions.bloom import bitmap_df
-
+def test_bitmap_frame_is_a_snapshot(spark):
+    """A shipped bitmap frame keeps the words it was built from: later
+    ships of the same bloom, mutation of the bloom and its collection
+    leave it unchanged."""
     a = BloomFilter.empty(capacity=2048)
-    b = BloomFilter.empty(capacity=2048)
     a.add(np.arange(100, dtype=np.uint64))
-    b.add(np.arange(200, 300, dtype=np.uint64))
-    df_a = bitmap_df(spark, a)
-    for _ in range(4):  # 4 later ships from ANOTHER bloom
-        bitmap_df(spark, b)
-    # df_a's staged file must still be readable (old global keep-2
-    # would have deleted it)
-    assert df_a.count() == 1
-    assert len(a._stage_paths) <= 2 and len(b._stage_paths) <= 2
+    want = a.words.view(np.int64).tolist()
+    df = bitmap_df(spark, a)
+    for _ in range(3):
+        bitmap_df(spark, a)
+    a.add(np.arange(1000, 5000, dtype=np.uint64))
+    assert a.words.view(np.int64).tolist() != want
+    del a
+    gc.collect()
+    (row,) = df.collect()
+    assert row["_bloom_arr"] == want
+
+
+def test_bitmap_frame_reads_no_file(spark):
+    """The bitmap travels inside the job itself, so an executor on another
+    host needs no shared filesystem to probe it."""
+    bf = BloomFilter.empty(capacity=2048)
+    bf.add(np.arange(100, dtype=np.uint64))
+    assert bitmap_df(spark, bf).inputFiles() == []
