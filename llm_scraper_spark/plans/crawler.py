@@ -33,7 +33,7 @@ Layout under ``workdir``:
 The URL-seen Bloom prefilter is a driver-resident ``BloomFilter``
 maintained incrementally: after each round the url_hash columns of the
 round's fetch and blocked snapshots are folded into the bitmap on the
-driver (pyarrow + numpy, in fixed-size hash batches, so driver memory
+driver (pyarrow + numpy, one record batch per add, so driver memory
 stays bounded at any seen size).  On resume it is rebuilt once, by the
 same fold, from the committed seen set; when the seen count passes the
 bitmap's design capacity it is rebuilt at 4x (amortized O(1) per
@@ -88,12 +88,6 @@ from ..operators.frontier import (
     retry_rows,
     run_round,
 )
-
-
-#: hashes per ``bloom.add`` in the driver-side bloom fold: bounds the
-#: fold's hash buffer (8 bytes/hash, 64 MB) at any seen-set size, while
-#: keeping the number of add() calls — each O(bitmap) — small
-_BLOOM_FOLD_HASHES = 8_000_000
 
 
 @dataclass
@@ -344,8 +338,6 @@ class Crawler:
     def _frontier_bands(self, fpath: str) -> list[dict]:
         """(band, path, rows) per band directory, ascending band —
         driver-side footer reads only, no Spark job."""
-        import pyarrow.parquet as pq
-
         out = []
         if not os.path.isdir(fpath):
             return out
@@ -353,11 +345,7 @@ class Crawler:
             if not name.startswith("_band="):
                 continue
             d = os.path.join(fpath, name)
-            rows = sum(
-                int(pq.ParquetFile(os.path.join(d, f)).metadata.num_rows)
-                for f in os.listdir(d)
-                if f.startswith("part-")
-            )
+            rows = sum(p["rows"] for p in _parquet_partition_rows(d))
             out.append({"band": int(name.split("=")[1]), "path": d, "rows": rows})
         return sorted(out, key=lambda x: x["band"])
 
@@ -750,19 +738,12 @@ class Crawler:
 
         The column streams in pyarrow record batches (read on pyarrow's
         thread pool — a per-file read_table loop cost ~1.2 s of serial
-        driver time per round at 64-file snapshots) and is OR'd in with
-        one ``bloom.add`` per ``_BLOOM_FOLD_HASHES`` hashes.  Not one add
-        per file: add()'s fast path allocates and packbits a
-        bitmap-sized bool temp, so per-file calls cost n_files ×
-        O(bitmap) — measured on the 10^7-seed probe as the absorb phase
-        stepping 0.4 s → ~4 s once the rebuild 4×'d the bitmap.  Not one
-        add over the whole column either: its 8 bytes/row would grow
-        driver memory with the seen set."""
-        import numpy as np
+        driver time per round at 64-file snapshots), and each batch is
+        OR'd in by its own ``bloom.add``: an add costs O(batch), not
+        O(bitmap), so driver memory stays one batch at any seen size."""
         import pyarrow.dataset as ds
 
-        buf: list = []
-        held = rows = 0
+        rows = 0
         for path in dirs:
             if not os.path.isdir(path) or not any(
                 n.startswith("part-") for n in os.listdir(path)
@@ -771,15 +752,8 @@ class Crawler:
             for batch in ds.dataset(path, format="parquet").to_batches(
                 columns=["url_hash"]
             ):
-                hs = batch.column(0).to_numpy(zero_copy_only=False)
-                if held and held + len(hs) > _BLOOM_FOLD_HASHES:
-                    bloom.add(np.concatenate(buf))
-                    buf, held = [], 0
-                buf.append(hs.astype(np.uint64, copy=False))
-                held += len(hs)
-                rows += len(hs)
-        if held:
-            bloom.add(np.concatenate(buf))
+                bloom.add(batch.column(0).to_numpy(zero_copy_only=False))
+                rows += batch.num_rows
         return rows
 
     def _seen_dirs(self, upto_round: int) -> list[str]:
@@ -831,11 +805,12 @@ class Crawler:
 
     def _bloom_absorb(self, r: int, seen_rows: int) -> None:
         """OR round r's delta (its fetch + blocked ``url_hash`` columns,
-        not the whole seen set — O(delta) per round) into the
-        incremental filter; rebuild when the seen count exceeds the
-        bitmap's design capacity.  The rebuild sizes at 4x the seen
-        count, so rebuilds happen at 4x growth — amortized O(1) — and
-        the filter never runs past its 1% fpp budget."""
+        not the whole seen set) into the incremental filter — O(delta)
+        per round, since each ``add`` touches one word per key; rebuild
+        when the seen count exceeds the bitmap's design capacity.  The
+        rebuild sizes at 4x the seen count, so rebuilds happen at 4x
+        growth — amortized O(1) — and the filter never runs past the
+        capacity its ``BITS_PER_KEY`` was measured at (fpp <= 1%)."""
         if not self.use_bloom:
             return
         if self._bloom is not None and seen_rows > self._bloom_cap:

@@ -10,7 +10,8 @@ representative value-gate round trip so drift fails fast:
 * groups and CHECKSUM_KEYS refer only to registered keys (a deleted
   member fails here until the generator is re-run);
 * attest keys are a PREFIX of the registry (the driver samples the
-  first ~50 keys — prefix position is the whole point);
+  first ~50 keys — prefix position is the whole point), and they fit
+  inside that sample with a stated margin;
 * one mixed group (checksummed + count-only members) matches its
   DuckDB twin at sf0.001 via the same rows/schema/values discipline
   as the driver.
@@ -45,6 +46,21 @@ def test_attest_keys_lead_the_registry_prefix():
         "attest keys must be the registration prefix the driver samples"
     )
     assert set(attest_gen.GROUPS) <= set(entry.oracle_sql())
+
+
+#: the driver's correctness run samples the first ~50 registered keys
+DRIVER_SAMPLE_KEYS = 50
+#: slack for the sample's "~": the attest prefix must fit even if the
+#: sample is this many keys shorter (COVERAGE.md)
+SAMPLE_MARGIN = 4
+
+
+def test_attest_keys_fit_the_driver_sample():
+    n = len(attest_gen.GROUPS)
+    assert n + SAMPLE_MARGIN <= DRIVER_SAMPLE_KEYS, (
+        f"{n} attest keys + {SAMPLE_MARGIN} margin exceed the driver's "
+        f"{DRIVER_SAMPLE_KEYS}-key sample: merge attest groups"
+    )
 
 
 def test_one_group_matches_oracle(spark):

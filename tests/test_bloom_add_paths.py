@@ -1,52 +1,20 @@
-"""The two BloomFilter.add code paths must be bit-identical.
+"""BloomFilter's one add path: order- and batching-independent, no
+false negatives (bit 63 included), and fpp <= 1% at design capacity.
 
-``add`` picks between a boolean-scatter+packbits fast path (small
-bitmaps, big batches) and the in-place ``bitwise_or.at`` fallback
-(huge bitmaps / tiny batches).  Seen-set correctness rides on the two
-producing the same words: a divergence is a silent false negative
-(re-fetch) or false positive (extra join probe) depending on which
-side built vs probed.  No Spark needed — pure numpy.
+The crawler folds the seen set into the bitmap one record batch at a
+time and a resume rebuilds it in one pass; seen-set correctness rides
+on both producing the same words.  No Spark needed — pure numpy.
 """
 
 import numpy as np
+import pytest
 
 from llm_scraper_spark.functions.bloom import BloomFilter
 
 
-def _fresh_pair(capacity: int) -> tuple[BloomFilter, BloomFilter]:
-    a = BloomFilter.empty(capacity)
-    b = BloomFilter.empty(capacity)
-    assert a.m_bits == b.m_bits and a.k == b.k
-    return a, b
-
-
-def _force_fallback(bf: BloomFilter, hashes: np.ndarray) -> None:
-    idx = bf._indices(np.asarray(hashes, dtype=np.uint64)).ravel()
-    np.bitwise_or.at(
-        bf.words, (idx // 64).astype(np.int64), np.uint64(1) << (idx % 64)
-    )
-
-
-def test_packbits_path_matches_fallback_bitwise():
-    rng = np.random.default_rng(7)
-    # 200k hashes >= the 4096 batch floor, capacity small enough that
-    # m_bits stays under the 1<<30 gate -> add() takes the fast path.
-    hashes = rng.integers(0, 1 << 63, size=200_000, dtype=np.uint64)
-    fast, slow = _fresh_pair(capacity=500_000)
-    assert fast.m_bits <= (1 << 30)
-    fast.add(hashes)
-    _force_fallback(slow, hashes)
-    assert np.array_equal(fast.words, slow.words)
-    # And the probe side agrees on both: everything added is found.
-    assert fast.maybe_contains(hashes).all()
-    assert slow.maybe_contains(hashes).all()
-
-
-def test_small_batch_takes_fallback_and_accumulates():
+def test_many_small_adds_equal_one_large_add():
     rng = np.random.default_rng(11)
-    bf, ref = _fresh_pair(capacity=100_000)
-    # Many small adds (below the 4096 floor -> fallback) must equal one
-    # big fast-path add of the same union.
+    bf, ref = BloomFilter.empty(100_000), BloomFilter.empty(100_000)
     chunks = [rng.integers(0, 1 << 63, size=300, dtype=np.uint64) for _ in range(20)]
     for c in chunks:
         bf.add(c)
@@ -54,11 +22,25 @@ def test_small_batch_takes_fallback_and_accumulates():
     assert np.array_equal(bf.words, ref.words)
 
 
-def test_top_bit_hashes_identical_across_paths():
-    # Hashes with bit 63 set exercise the mask-first contract in
-    # _indices; both add paths consume the same indices.
+def test_top_bit_hashes_have_no_false_negatives():
+    # Hashes with bit 63 set, as int64 (negative) and as uint64: the
+    # filter masks bit 63 first, so both views land on the same words.
     hashes = (np.arange(8192, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)) | np.uint64(1 << 63)
-    fast, slow = _fresh_pair(capacity=50_000)
-    fast.add(hashes)
-    _force_fallback(slow, hashes)
-    assert np.array_equal(fast.words, slow.words)
+    bf = BloomFilter.empty(50_000)
+    bf.add(hashes.view(np.int64))
+    assert bf.maybe_contains(hashes).all()
+    assert bf.maybe_contains(hashes.view(np.int64)).all()
+    low = BloomFilter.empty(50_000)
+    low.add(hashes & np.uint64((1 << 63) - 1))
+    assert np.array_equal(bf.words, low.words)
+
+
+@pytest.mark.parametrize("capacity", [4096, 30_000, 1_000_000])
+def test_fpp_at_design_capacity_is_at_most_one_percent(capacity):
+    rng = np.random.default_rng(capacity)
+    bf = BloomFilter.empty(capacity)
+    added = rng.integers(0, 1 << 63, size=capacity, dtype=np.uint64)
+    bf.add(added)
+    assert bf.maybe_contains(added).all()
+    fresh = rng.integers(0, 1 << 63, size=200_000, dtype=np.uint64)
+    assert bf.maybe_contains(fresh).mean() <= 0.01

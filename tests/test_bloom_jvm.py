@@ -7,17 +7,45 @@ import gc
 
 import numpy as np
 
-from llm_scraper_spark.functions.bloom import BloomFilter, bitmap_df, with_bloom_flag
+from llm_scraper_spark.functions.bloom import (
+    K,
+    BloomFilter,
+    bitmap_df,
+    bloom_probe_col,
+    with_bloom_flag,
+)
+
+
+def _py_word_mask(h: int, n_words: int) -> tuple[int, int]:
+    """The blocked filter's (word, mask) in plain Python ints: mask bit
+    63 off, word = (h mod 2^61) mod n_words, and K bits inside that
+    word, each a 6-bit slice of the shift/xor mix."""
+    h &= (1 << 63) - 1
+    mix = (h ^ (h >> 31) ^ (h << 17)) & ((1 << 58) - 1)
+    mask = 0
+    for i in range(K):
+        mask |= 1 << ((mix >> (6 * i)) & 63)
+    return (h & ((1 << 61) - 1)) % n_words, mask
 
 
 def _assert_jvm_probe_matches_numpy(spark, added, seen, fresh):
-    """Probe ``seen`` (a prefix of ``added``) then ``fresh``: the JVM
-    probe flags exactly what ``maybe_contains`` flags, with no false
-    negatives on ``seen`` and ~1% fpp on ``fresh``."""
+    """Probe ``seen`` (a prefix of ``added``) then ``fresh``: numpy's
+    word and mask follow the blocked math, the JVM probe flags exactly
+    what ``maybe_contains`` flags, with no false negatives on ``seen``
+    and ~1% fpp on ``fresh``."""
     probes = np.concatenate([seen, fresh])
-    bf = BloomFilter.empty(capacity=len(added), fpp=0.01)
-    bf.add(added.astype(np.uint64))
-    want = bf.maybe_contains(probes.astype(np.uint64)).tolist()
+    bf = BloomFilter.empty(capacity=len(added))
+    bf.add(added)
+    word, mask = bf._word_mask(probes)
+    n_words = bf.words.size
+    assert [(int(w), int(m)) for w, m in zip(word, mask)] == [
+        _py_word_mask(int(h) & ((1 << 64) - 1), n_words) for h in probes
+    ]
+    want = bf.maybe_contains(probes).tolist()
+    assert want == [
+        int(bf.words[w]) & m == m
+        for w, m in (_py_word_mask(int(h) & ((1 << 64) - 1), n_words) for h in probes)
+    ]
     df = spark.createDataFrame([(int(h),) for h in probes], "url_hash long")
     got = [
         r["_maybe_seen"]
@@ -73,3 +101,10 @@ def test_bitmap_frame_reads_no_file(spark):
     bf = BloomFilter.empty(capacity=2048)
     bf.add(np.arange(100, dtype=np.uint64))
     assert bitmap_df(spark, bf).inputFiles() == []
+
+
+def test_probe_reads_one_bitmap_word(spark):
+    """The JVM probe reads the bitmap array once per row — one
+    ``element_at`` and one mask compare, not one read per bit."""
+    col = bloom_probe_col("_bloom_arr", 64 * 1000, K, "url_hash")
+    assert str(col).count("element_at(") == 1
